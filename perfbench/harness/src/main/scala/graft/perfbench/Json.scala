@@ -1,0 +1,37 @@
+package graft.perfbench
+
+/** Minimal JSON rendering for the run record (the harness only writes
+  * JSON; the Python side reads it).
+  */
+object Json {
+  final case class Raw(text: String)
+  def raw(text: String): Raw = Raw(text)
+
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  def value(v: Any): String = v match {
+    case null => "null"
+    case Raw(t) => t
+    case s: String => str(s)
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case f: Float => value(f.toDouble)
+    case b: Boolean => b.toString
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: Map[_, _] => m.map { case (k, x) => str(k.toString) + ": " + value(x) }
+      .mkString("{", ", ", "}")
+    case xs: Iterable[_] => xs.map(value).mkString("[", ", ", "]")
+    case other => str(other.toString)
+  }
+
+  def obj(kv: (String, Any)*): String =
+    kv.map { case (k, v) => str(k) + ": " + value(v) }.mkString("{", ", ", "}")
+}
