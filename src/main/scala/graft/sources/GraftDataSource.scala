@@ -427,20 +427,6 @@ private[graft] object GraftDataSource {
     }
   }
 
-  /** Can a commit's recorded [min,max] for one column intersect
-    * [lo, hi] (None = that side unbounded)? Bounds arrive already in the
-    * tag's canonical form. ONE comparator serves this, the merge path,
-    * and their parse-tolerance posture: [[ManifestTable.statOverlap]]
-    * (decimal for num; UTF-8 BINARY order for str/ts canonical forms —
-    * the order Spark's min/max recorded them in; any parse surprise
-    * keeps the dir). [[ManifestTable.prunedDataDirs]] stays separate on
-    * purpose: there an unparseable CALLER bound is a caller bug and
-    * throws, while a planner-path filter must never throw, only decline
-    * to prune.
-    */
-  private def statCanMatch(s: ColStat, lo: Option[String], hi: Option[String]): Boolean =
-    ManifestTable.statOverlap(s.tag, s, lo, hi)
-
   /** Dir-level answer to "can this commit hold rows matching `f`?" —
     * strictly conservative: true unless the stats PROVE no row can
     * match. Strict vs non-strict inequalities deliberately collapse
@@ -448,13 +434,19 @@ private[graft] object GraftDataSource {
     * exactly equals a strict bound survives — pruning may only skip
     * what provably cannot match, and the residual filter drops the
     * boundary rows.
+    *
+    * Bounds canonicalize per tag ([[canon]]) and compare through
+    * [[ManifestTable.statOverlap]], the comparator the merge path and
+    * [[ManifestTable.prunedDataDirs]] share. A bound that does not
+    * canonicalize never throws here — a planner-path filter only
+    * declines to prune.
     */
   private[graft] def entryCanMatch(schema: StructType, e: Entry, f: Filter): Boolean = {
     def bounded(c: String, lo: Option[Any], hi: Option[Any]): Boolean =
       (for {
         tag <- tagOf(schema, c)
         stat <- e.stats.get(c)
-      } yield statCanMatch(stat,
+      } yield ManifestTable.statOverlap(stat.tag, stat,
         lo.flatMap(canon(tag, _)), hi.flatMap(canon(tag, _))))
         .getOrElse(true) // no stats / untagged type: never prune
     f match {
@@ -721,10 +713,9 @@ private[graft] object GraftDataSource {
     }
 
     /** `TRUNCATE TABLE` — an overwrite with the empty snapshot, schema
-      * kept (the default SupportsDeleteV2 route through
-      * `deleteWhere(TRUE)` lands in [[ManifestTable.rewriteEntriesPinned]]'s
-      * empty-snapshot anchor, which preserves the schema too; this
-      * override just states the semantics directly).
+      * kept: `deleteWhere(TRUE)` drops every commit metadata-only, and
+      * [[ManifestTable.cowRewriteCommit]] then commits its empty-snapshot
+      * anchor, which preserves the schema.
       */
     override def truncateTable(): Boolean = {
       deleteWhere(Array[Filter](AlwaysTrue()))

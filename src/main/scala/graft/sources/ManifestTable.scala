@@ -55,8 +55,9 @@ object ManifestTable {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Fresh table-relative data-dir name. The UUID is what makes
-    * concurrent writers collision-free AND what [[tornCasLanded]] leans
-    * on as an authorship proof — every commit path must mint dirs here.
+    * concurrent writers collision-free AND what [[publish]]'s torn-CAS
+    * adoption leans on as an authorship proof — every commit path must
+    * mint dirs here.
     */
   private def newDataDirName(): String =
     s"data/${UUID.randomUUID().toString.replace("-", "").take(16)}"
@@ -82,33 +83,6 @@ object ManifestTable {
     */
   private def writeFile(spark: SparkSession, p: Path, content: String): Boolean =
     store(spark).putOverwrite(p, content)
-
-  /** CAS publish — exactly one concurrent publisher of a given path
-    * wins; see [[CommitStore.putIfAbsent]] for the per-store mechanics
-    * (rename + read-back vs native conditional put). May report a loss
-    * for a publish that actually landed (torn read-back); the commit
-    * loops recover by re-checking the exact version they attempted.
-    */
-  private def casCreateFile(spark: SparkSession, p: Path, content: String): Boolean =
-    store(spark).putIfAbsent(p, content)
-
-  /** Torn-CAS adoption for DERIVED commits (merge, COW rewrite,
-    * compaction): did the version a CAS reported as lost actually land,
-    * and is it OURS? The new data-dir name is a fresh UUID, so its
-    * presence in exactly the attempted version's entry list is proof of
-    * authorship. [[commit]]'s loop does the same check inline; the
-    * derived-commit loops MUST make it before deleting their new dir —
-    * deleting on a false-when-actually-landed report would leave the
-    * published head referencing a deleted dir (every read throws, and
-    * manifests are immutable, so the table stays broken until manual
-    * repair). This is the recovery obligation [[CommitStore.putIfAbsent]]
-    * places on callers. A missing/unreadable attempted manifest reads as
-    * not-landed — then nothing references the dir and deletion is safe.
-    */
-  private def tornCasLanded(spark: SparkSession, table: String,
-      attempted: Long, dirName: String): Boolean =
-    scala.util.Try(manifestEntries(spark, table, attempted)).toOption
-      .exists(_.exists(_.dir == dirName))
 
   private def readFile(spark: SparkSession, p: Path): String =
     store(spark).read(p)
@@ -147,17 +121,26 @@ object ManifestTable {
   private def manifestPath(table: String, v: Long) =
     new Path(table, f"_manifests/m-$v%06d.txt")
 
+  private def listManifests(spark: SparkSession, table: String): Seq[(String, Long)] =
+    store(spark).listFiles(new Path(table, "_manifests"))
+
+  /** (version, mtimeMs) of every `m-<v>.txt` in a `_manifests` listing —
+    * the one parser of manifest file names. Temp siblings and anything
+    * else in the directory are skipped.
+    */
+  private def manifestVersions(listing: Seq[(String, Long)]): Seq[(Long, Long)] =
+    listing.flatMap { case (n, mtime) =>
+      if (n.startsWith("m-") && n.endsWith(".txt"))
+        n.stripPrefix("m-").stripSuffix(".txt").toLongOption.map(_ -> mtime)
+      else None
+    }
+
   /** Highest version any manifest file claims — the commit head, which
     * can run ahead of the `_latest` hint (writer crashed mid-publish, or
     * a concurrent writer between manifest and pointer).
     */
   private def highestManifest(spark: SparkSession, table: String): Long =
-    store(spark).listFiles(new Path(table, "_manifests"))
-      .foldLeft(0L) { case (acc, (n, _)) =>
-        if (n.startsWith("m-") && n.endsWith(".txt"))
-          n.stripPrefix("m-").stripSuffix(".txt").toLongOption.fold(acc)(math.max(acc, _))
-        else acc
-      }
+    manifestVersions(listManifests(spark, table)).foldLeft(0L)((a, v) => math.max(a, v._1))
 
   /** Whether `path` is a manifest table (has ≥1 published manifest) —
     * the [[GraftCatalog]] discovery probe, routed through the commit
@@ -165,8 +148,7 @@ object ManifestTable {
     * manifests.
     */
   private[graft] def isTable(spark: SparkSession, path: String): Boolean =
-    store(spark).listFiles(new Path(path, "_manifests"))
-      .exists { case (n, _) => n.startsWith("m-") && n.endsWith(".txt") }
+    manifestVersions(listManifests(spark, path)).nonEmpty
 
   // ---- manifest entry format ---------------------------------------------
   // one line per data dir:  <dir>[\t<col>:<tag>:<minB64>:<maxB64>[:<nulls>];...]
@@ -236,7 +218,7 @@ object ManifestTable {
     else parseManifest(readFile(spark, manifestPath(table, v)))._2
 
   /** The wall-clock commit time stamped INSIDE a manifest at CAS time
-    * (`#ts:<epochMillis>` header, r10+) — the honest axis `TIMESTAMP AS
+    * (`#ts:<epochMillis>` header) — the honest axis `TIMESTAMP AS
     * OF` resolves on, unlike file mtimes which report whatever the
     * filesystem last touched. None for pre-stamp legacy manifests.
     */
@@ -268,9 +250,7 @@ object ManifestTable {
     */
   private[graft] def versionAtTime(spark: SparkSession, table: String,
       targetMs: Long): Long = {
-    val versions = store(spark).listFiles(new Path(table, "_manifests"))
-      .map(_._1).filter(n => n.startsWith("m-") && n.endsWith(".txt"))
-      .flatMap(_.stripPrefix("m-").stripSuffix(".txt").toLongOption)
+    val versions = manifestVersions(listManifests(spark, table)).map(_._1)
       .sorted(Ordering[Long].reverse)
     require(versions.nonEmpty, s"manifest-table: $table has no committed version")
     var earliest = Long.MaxValue
@@ -293,18 +273,23 @@ object ManifestTable {
   private def dataDirs(spark: SparkSession, table: String, v: Long): Seq[String] =
     manifestEntries(spark, table, v).map(_.dir)
 
-  /** The columns the current head's commits record stats on — what a SQL
-    * write inherits as its own `statsCols`, so pruning survives INSERTs
-    * that have no way to name them. Self-sustaining: once any commit in
-    * the snapshot carries stats on a column, every inheriting append
-    * keeps recording it (columns absent from the written schema are
-    * skipped by [[statTags]], never wrong).
+  /** The stats-inheritance rule: `statsCols` when the caller names any,
+    * else the columns the snapshot's commits already record stats on —
+    * so pruning survives SQL writes, merges and rewrites that have no
+    * way to name them. Self-sustaining: once any commit in the snapshot
+    * carries stats on a column, every inheriting write keeps recording
+    * it (columns absent from the written schema are skipped by
+    * [[statTags]], never wrong). Pure over entries the caller already
+    * read, so inheriting costs no manifest read.
     */
-  private[graft] def headStatsCols(spark: SparkSession, table: String): Seq[String] = {
-    val head = highestManifest(spark, table)
-    if (head <= 0) Nil
-    else manifestEntries(spark, table, head).flatMap(_.stats.keys).distinct.sorted
-  }
+  private def statsOrInherited(statsCols: Seq[String], entries: Seq[Entry]): Seq[String] =
+    if (statsCols.nonEmpty) statsCols else entries.flatMap(_.stats.keys).distinct.sorted
+
+  /** The current head's inherited stats columns — what a SQL write
+    * passes as its own `statsCols`.
+    */
+  private[graft] def headStatsCols(spark: SparkSession, table: String): Seq[String] =
+    statsOrInherited(Nil, manifestEntries(spark, table, highestManifest(spark, table)))
 
   /** Column → stats tag for the supported types; unsupported columns are
     * skipped (absent stats = the dir is never pruned — always safe).
@@ -409,6 +394,79 @@ object ManifestTable {
     rowStats(tags, df.agg(aggs.head, aggs.tail: _*).head())
   }
 
+  /** THE manifest commit loop — every version any writer publishes goes
+    * through here. Each pass reads the manifest head `base` and asks
+    * `attempt(base)` for the commit to make on top of it: `None` when
+    * there is nothing to commit (the call returns `base`), else the
+    * entries of `m-(base+1)` plus the data dirs this attempt wrote. The
+    * CAS on `m-(base+1)` is the optimistic-concurrency lock:
+    *
+    *   - won: `base + 1` is committed;
+    *   - reported lost: [[CommitStore.putIfAbsent]] may report a torn
+    *     publish as lost although it landed, so the version is ADOPTED
+    *     when `m-(base+1)` lists exactly the attempted dirs (a fresh
+    *     UUID dir proves authorship; an entry-identical racer published
+    *     the same snapshot). Otherwise a racer won: the attempt's
+    *     written dirs are deleted and the next pass re-derives from the
+    *     new head, so content derived from a snapshot (merge, rewrite,
+    *     compaction) is never published over a head it did not see.
+    *
+    * The adoption check must precede the delete: deleting on a torn
+    * report would leave the landed head referencing deleted dirs, and
+    * manifests are immutable. Dirs an attempt reuses across passes
+    * ([[commit]]'s data dir, the empty-snapshot anchor) are not listed
+    * as written. Every call ends in [[advancePointer]], the no-op
+    * outcome included, so a replay heals a pointer a crashed writer
+    * left behind. `attempt` may throw to abort before publishing.
+    */
+  private def publish(spark: SparkSession, table: String)(
+      attempt: Long => Option[(Seq[Entry], Seq[String])]): Long = {
+    var committed = -1L
+    while (committed < 0) {
+      val base = highestManifest(spark, table)
+      attempt(base) match {
+        case None => committed = base
+        case Some((entries, written)) =>
+          def landed = scala.util.Try(manifestEntries(spark, table, base + 1)).toOption
+            .exists(_.map(_.dir).toSet == entries.map(_.dir).toSet)
+          if (store(spark).putIfAbsent(manifestPath(table, base + 1),
+              renderManifest(spark, table, base, entries)) || landed)
+            committed = base + 1
+          else written.foreach { d => val p = new Path(table, d); fs(spark, p).delete(p, true) }
+      }
+    }
+    advancePointer(spark, table, committed)
+    committed
+  }
+
+  /** Write `df` as one data dir (a fresh one by default) and record its
+    * stats — the new entry of a commit. Overwrite mode: bytes already in
+    * a token dir are a crashed attempt's unreferenced garbage.
+    */
+  private def writeEntry(df: DataFrame, table: String, statsCols: Seq[String],
+      dirName: String = newDataDirName()): Entry = {
+    val dirPath = new Path(table, dirName)
+    df.write.mode("overwrite").parquet(dirPath.toString)
+    Entry(dirName, commitStats(df.sparkSession, dirPath, statsCols))
+  }
+
+  /** The empty-snapshot anchor: a commit that would leave zero dirs
+    * commits ONE empty schema-carrying dir instead — the snapshot schema
+    * lives in parquet footers, so a zero-dir manifest would erase it and
+    * strand every follow-up INSERT. The returned writer makes the dir at
+    * most once per commit call and reuses it across CAS retries.
+    */
+  private def anchorOnce(spark: SparkSession, table: String): StructType => Entry = {
+    var made: Option[Entry] = None
+    schema => made.getOrElse {
+      val e = writeEntry(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+        .repartition(1), table, Nil)
+      made = Some(e)
+      e
+    }
+  }
+
   /** Commit `df` as the next version. `append = true` carries the commit
     * head's data dirs (and their stats) forward into the new manifest;
     * `false` makes the new data the entire snapshot (atomic overwrite).
@@ -428,50 +486,37 @@ object ManifestTable {
     * strict: an accidental shape change is usually a bug, not evolution.
     *
     * Safe under concurrent writers: the data dir is written once, then
-    * the manifest CAS loop retries against whatever head wins each race —
-    * every committer's data lands in some version, in CAS order. An
-    * APPEND retry carries the race winner's data forward; an OVERWRITE
-    * retry is last-writer-wins by design (its content does not derive
-    * from the snapshot it replaces — racing commits serialize in CAS
-    * order, exactly as if they had run back-to-back). A compaction,
-    * whose content DOES derive from the snapshot, must not blind-retry:
-    * [[compactCommit]] pins its base and recomputes on a lost race.
+    * [[publish]] retries against whatever head wins each race — every
+    * committer's data lands in some version, in CAS order. An APPEND
+    * retry carries the race winner's data forward; an OVERWRITE retry is
+    * last-writer-wins by design (its content does not derive from the
+    * snapshot it replaces — racing commits serialize in CAS order,
+    * exactly as if they had run back-to-back).
     */
   def commit(df: DataFrame, table: String, append: Boolean,
-      statsCols: Seq[String] = Nil, allowEvolution: Boolean = false): Long = {
+      statsCols: Seq[String] = Nil, allowEvolution: Boolean = false): Long =
+    commitDir(df, table, newDataDirName(), append, statsCols, allowEvolution,
+      idempotent = false)
+
+  /** The body [[commit]] and [[commitIdempotent]] share: `dirName` is
+    * written on the first attempt that needs it and carried across
+    * retries. `idempotent` makes a head that already lists `dirName` a
+    * no-op — before anything is written.
+    */
+  private def commitDir(df: DataFrame, table: String, dirName: String,
+      append: Boolean, statsCols: Seq[String], allowEvolution: Boolean,
+      idempotent: Boolean): Long = {
     val spark = df.sparkSession
-    val dirName = newDataDirName()
-    val dirPath = new Path(table, dirName)
-    df.write.parquet(dirPath.toString)
-    val entry = Entry(dirName, commitStats(spark, dirPath, statsCols))
-    var committed = 0L
-    var attempted = 0L // version the previous iteration's CAS targeted
-    while (committed == 0L) {
-      val base = highestManifest(spark, table)
-      // torn-CAS recovery: a CAS whose read-back verification was torn
-      // (IOException reported as a loss) may actually have landed. Its
-      // manifest, if it exists, is EXACTLY version `attempted` — manifests
-      // are immutable once CAS-created — so check that version directly
-      // rather than the current head: a concurrent overwrite/compaction
-      // may have rewritten dirs since, and a head-only check would miss
-      // the landed commit and append the entry a second time (duplicating
-      // its rows, or resurrecting them past the overwrite)
-      if (attempted > 0 && attempted <= base &&
-          manifestEntries(spark, table, attempted).exists(_.dir == entry.dir)) {
-        committed = attempted
-      } else {
-        val baseEntries = if (append && base > 0) manifestEntries(spark, table, base) else Nil
+    lazy val entry = writeEntry(df, table, statsCols, dirName)
+    publish(spark, table) { base =>
+      val baseEntries = if (append) manifestEntries(spark, table, base) else Nil
+      if (idempotent && baseEntries.exists(_.dir == dirName)) None
+      else {
         if (append && base > 0)
           checkAppendSchema(spark, table, base, df, allowEvolution)
-        val content = renderManifest(spark, table, base, baseEntries :+ entry)
-        attempted = base + 1
-        if (casCreateFile(spark, manifestPath(table, base + 1), content))
-          committed = base + 1
-        // else: lost the race - loop re-reads the new head and retries
+        Some((baseEntries :+ entry, Nil))
       }
     }
-    advancePointer(spark, table, committed)
-    committed
   }
 
   /** `ALTER TABLE ADD COLUMNS` — the ONE safe DDL mutation, expressed as
@@ -554,7 +599,7 @@ object ManifestTable {
     * window), the standard table-format arrangement.
     *
     * Contract: ONE committer per token at a time (concurrent committers
-    * of DIFFERENT tokens are fine — the CAS loop serializes them like
+    * of DIFFERENT tokens are fine — [[publish]] serializes them like
     * [[commit]]). Two simultaneous writers of the same token would race
     * on the token's data dir; sequential replay — the streaming
     * foreachBatch shape this exists for — never does that.
@@ -564,43 +609,8 @@ object ManifestTable {
     require(token.nonEmpty && token.forall(c =>
       c.isLetterOrDigit || c == '-' || c == '_'),
       s"manifest-table: token '$token' must be [A-Za-z0-9_-]+")
-    val spark = df.sparkSession
-    val dirName = s"data/t-$token"
-    val dirPath = new Path(table, dirName)
-    def tokenAt(v: Long): Boolean =
-      v > 0 && manifestEntries(spark, table, v).exists(_.dir == dirName)
-    // the replay no-op paths still heal the pointer: the replay exists
-    // precisely because a writer may have died between the manifest CAS
-    // and the pointer write, and returning without advancing would leave
-    // the committed batch invisible to pointer-based reads indefinitely
-    val head0 = highestManifest(spark, table)
-    if (tokenAt(head0)) { advancePointer(spark, table, head0); return head0 }
-    // any bytes already in the dir are a crashed attempt's invisible
-    // garbage (no manifest references them) - overwrite is safe
-    df.write.mode("overwrite").parquet(dirPath.toString)
-    val entry = Entry(dirName, commitStats(spark, dirPath, statsCols))
-    var committed = 0L
-    var attempted = 0L // version the previous iteration's CAS targeted
-    while (committed == 0L) {
-      val base = highestManifest(spark, table)
-      // same torn-CAS recovery as commit(): our CAS, if it landed despite
-      // a torn read-back, landed at exactly `attempted` — check there, not
-      // just the head, in case later commits rewrote dirs since
-      if (attempted > 0 && attempted <= base && tokenAt(attempted)) {
-        committed = attempted
-      } else if (tokenAt(base)) { // concurrent committer of this token won
-        advancePointer(spark, table, base); return base
-      } else {
-        if (base > 0) checkAppendSchema(spark, table, base, df, allowEvolution)
-        val entries = manifestEntries(spark, table, base) :+ entry
-        val content = renderManifest(spark, table, base, entries)
-        attempted = base + 1
-        if (casCreateFile(spark, manifestPath(table, base + 1), content))
-          committed = base + 1
-      }
-    }
-    advancePointer(spark, table, committed)
-    committed
+    commitDir(df, table, s"data/t-$token", append = true, statsCols,
+      allowEvolution, idempotent = true)
   }
 
   /** Monotonic `_latest` advance: never regress the hint. Two racing
@@ -654,36 +664,26 @@ object ManifestTable {
       column: String, lo: String, hi: String, version: Long = 0L): Seq[String] = {
     val v = if (version > 0) version else currentVersion(spark, table)
     require(v > 0, s"manifest-table: $table has no committed version")
-    // caller bounds parse OUTSIDE the per-entry tolerance: a non-numeric
-    // bound against a num column is a caller bug that must fail loudly,
+    // caller bounds canonicalize OUTSIDE statOverlap's per-entry
+    // tolerance: a non-numeric bound against a num column, or a
+    // malformed timestamp bound, is a caller bug that must fail loudly,
     // not degrade into a silent full-table scan
-    lazy val callerBounds =
-      try (BigDecimal(lo), BigDecimal(hi))
+    lazy val numBounds =
+      try { BigDecimal(lo); BigDecimal(hi); (lo, hi) }
       catch {
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"manifest-table: non-numeric bounds [$lo,$hi] for numeric column $column")
       }
-    // ts bounds likewise parse outside the per-entry tolerance - a
-    // malformed timestamp bound is a caller bug, not a full-scan request
+    // ts and NTZ stats share one canonical layout; NTZ bounds read as wall time
     lazy val tsBounds = (tsCanonBound(lo), tsCanonBound(hi))
     manifestEntries(spark, table, v).filter { e =>
-      e.stats.get(column) match {
-        case None => true
-        case Some(ColStat("num", mn, mx, _)) =>
-          val (l, h) = callerBounds
-          // unparseable RECORDED bounds keep the dir - pruning must only
-          // ever skip what provably cannot match
-          scala.util.Try(BigDecimal(mx) >= l && BigDecimal(mn) <= h)
-            .getOrElse(true)
-        case Some(ColStat("ts", mn, mx, _)) =>
-          val (l, h) = tsBounds
-          mx >= l && mn <= h
-        case Some(ColStat("tsn", mn, mx, _)) =>
-          // NTZ: same canonical layout, bounds interpreted as wall time
-          val (l, h) = tsBounds
-          mx >= l && mn <= h
-        case Some(ColStat(_, mn, mx, _)) =>
-          utf8Leq(lo, mx) && utf8Leq(mn, hi)
+      e.stats.get(column).forall { s =>
+        val (l, h) = s.tag match {
+          case "num" => numBounds
+          case "ts" | "tsn" => tsBounds
+          case _ => (lo, hi)
+        }
+        statOverlap(s.tag, s, Some(l), Some(h))
       }
     }.map(_.dir)
   }
@@ -887,7 +887,8 @@ object ManifestTable {
   }
 
   /** The dir-level footprint of a version diff: (from-only, to-only,
-    * shared). Spec hook for the pruning claim below. */
+    * shared), each sorted — the split [[snapshotDiff]] prunes its scan
+    * to. */
   private[graft] def diffDirs(spark: SparkSession, table: String,
       fromVersion: Long, toVersion: Long): (Seq[String], Seq[String], Seq[String]) = {
     val fromDirs = manifestEntries(spark, table, fromVersion).map(_.dir)
@@ -917,13 +918,11 @@ object ManifestTable {
       else math.max(hintVersion(spark, table), highestManifest(spark, table))
     require(fromVersion > 0 && fromVersion <= to,
       s"manifest-table: diff range $fromVersion -> $to invalid")
-    // one manifest read per version: the all-dirs lists and the
-    // shared-dir split derive from the same two entry lists
-    val fromAll = manifestEntries(spark, table, fromVersion).map(_.dir)
-    val toAll = manifestEntries(spark, table, to).map(_.dir)
-    val shared = fromAll.toSet intersect toAll.toSet
-    val fromOnly = fromAll.filterNot(shared).sorted
-    val toOnly = toAll.filterNot(shared).sorted
+    // one manifest read per version: the all-dirs lists (schema-cache
+    // keys) rebuild from the split
+    val (fromOnly, toOnly, shared) = diffDirs(spark, table, fromVersion, to)
+    val fromAll = (fromOnly ++ shared).sorted
+    val toAll = (toOnly ++ shared).sorted
     def side(dirs: Seq[String], v: Long, all: Seq[String], as: String) = {
       val schema = snapshotSchemaCached(spark, table, v, all)
       val df = if (dirs.isEmpty)
@@ -970,13 +969,7 @@ object ManifestTable {
     */
   private[graft] def historyRows(spark: SparkSession, table: String)
       : Seq[(Long, Long, Int, Int, Int)] = {
-    val manifests = store(spark).listFiles(new Path(table, "_manifests"))
-      .flatMap { case (n, mtime) =>
-        if (n.startsWith("m-") && n.endsWith(".txt"))
-          n.stripPrefix("m-").stripSuffix(".txt").toLongOption
-            .map(v => v -> mtime)
-        else None
-      }.sortBy(_._1)
+    val manifests = manifestVersions(listManifests(spark, table)).sortBy(_._1)
     var prev = Set.empty[String]
     manifests.map { case (v, mtimeMs) =>
       // ONE store read per version: dirs and the commit stamp parse from
@@ -985,7 +978,7 @@ object ManifestTable {
       val (stamp, entries) = parseManifest(readFile(spark, manifestPath(table, v)))
       val dirs = entries.map(_.dir).toSet
       // epoch MILLIS: the stamped in-manifest commit time when present
-      // (r10+, what TIMESTAMP AS OF resolves on), file mtime for legacy
+      // (what TIMESTAMP AS OF resolves on), file mtime for legacy
       // manifests (informational only)
       val ts = stamp.getOrElse(mtimeMs)
       val row = (v, ts, dirs.size,
@@ -993,52 +986,6 @@ object ManifestTable {
       prev = dirs
       row
     }
-  }
-
-  /** Metadata-only snapshot rewrite: commit a new version whose entry
-    * list is `rewrite(head entries)` — the primitive under metadata-only
-    * DELETE. No data moves or is destroyed: dropped dirs stay on disk for
-    * pinned readers until [[vacuum]], exactly like an overwrite's
-    * replaced commits. Concurrency is [[compactCommit]]'s contract — the
-    * new content DERIVES from the snapshot it read, so the CAS is pinned
-    * to that base and a lost race recomputes from the new head rather
-    * than publishing a stale derivation (`rewrite` re-runs per attempt
-    * and may throw if the new head no longer supports the rewrite).
-    *
-    * A rewrite that empties the snapshot commits ONE fresh empty data dir
-    * instead: the snapshot schema lives in parquet footers, so a
-    * zero-dir manifest would erase the schema and strand every
-    * follow-up INSERT. The anchor dir is written once and reused across
-    * CAS retries.
-    */
-  private[graft] def rewriteEntriesPinned(spark: SparkSession, table: String)(
-      rewrite: Seq[Entry] => Seq[Entry]): Long = {
-    var committed = 0L
-    var anchor: Option[Entry] = None
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
-      require(v > 0, s"manifest-table: $table has no committed version")
-      val entries = manifestEntries(spark, table, v)
-      val kept = rewrite(entries) match {
-        case empty if empty.isEmpty =>
-          if (anchor.isEmpty) {
-            val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
-            val dirName =
-              newDataDirName()
-            spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-              .repartition(1).write.parquet(new Path(table, dirName).toString)
-            anchor = Some(Entry(dirName, Map.empty))
-          }
-          anchor.toSeq
-        case kept => kept
-      }
-      val content = renderManifest(spark, table, v, kept)
-      if (casCreateFile(spark, manifestPath(table, v + 1), content))
-        committed = v + 1
-    }
-    advancePointer(spark, table, committed)
-    committed
   }
 
   /** Per-commit decision for [[cowRewriteCommit]]: carry the entry
@@ -1060,73 +1007,36 @@ object ManifestTable {
     * vanish metadata-only. At 100 TB this is the difference between a
     * point-UPDATE rewriting a handful of key-clustered commits and
     * rewriting the table: the classification runs over manifest stats,
-    * so provably-untouched dirs cost zero bytes of IO.
+    * so provably-untouched dirs cost zero bytes of IO. With nothing to
+    * rewrite this is metadata-only DELETE; a drop that empties the
+    * snapshot commits the empty-snapshot anchor instead.
     *
-    * Concurrency is [[compactCommit]]'s pinned-CAS contract: the new
-    * content derives from the snapshot it read, so classification and
-    * rewrite re-run per attempt against the new head, and a lost race
-    * deletes the stale attempt's dir. A rewrite that empties the whole
-    * snapshot anchors one empty schema-carrying dir, exactly like
-    * [[rewriteEntriesPinned]]. A classification with nothing to drop or
-    * rewrite is a no-op returning the current version (no empty commit
-    * spam). New-dir stats default to the head's recorded stats columns
-    * so pruning survives by inheritance (the [[mergeCommit]] rule).
+    * Classification and rewrite re-run per [[publish]] attempt against
+    * the head it read. A classification with nothing to drop or rewrite
+    * is a no-op returning the current version (no empty commit spam).
+    * New-dir stats follow [[statsOrInherited]].
     */
   private[graft] def cowRewriteCommit(spark: SparkSession, table: String,
       classify: (StructType, Entry) => CowAction,
       rewrite: DataFrame => DataFrame,
       statsCols: Seq[String] = Nil): Long = {
-    val root = new Path(table)
-    val f = fs(spark, root)
-    var committed = 0L
-    var anchor: Option[Entry] = None
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
+    val anchor = anchorOnce(spark, table)
+    publish(spark, table) { v =>
       require(v > 0, s"manifest-table: $table has no committed version")
       val entries = manifestEntries(spark, table, v)
       val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
       val decided = entries.map(e => e -> classify(schema, e))
       val kept = decided.collect { case (e, CowKeep) => e }
       val toRewrite = decided.collect { case (e, CowRewrite) => e }
-      if (toRewrite.isEmpty && kept.size == entries.size) return v // no-op
-      if (toRewrite.isEmpty) {
-        // pure metadata drop: rewriteEntriesPinned's shape, inlined so
-        // the anchor dir is shared across retry attempts
-        val content0 = kept match {
-          case empty if empty.isEmpty =>
-            if (anchor.isEmpty) {
-              val dirName =
-                newDataDirName()
-              spark.createDataFrame(
-                java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-                .repartition(1).write.parquet(new Path(table, dirName).toString)
-              anchor = Some(Entry(dirName, Map.empty))
-            }
-            anchor.toSeq
-          case k => k
-        }
-        if (casCreateFile(spark, manifestPath(table, v + 1),
-            renderManifest(spark, table, v, content0)))
-          committed = v + 1
-      } else {
-        val dirName =
-          newDataDirName()
-        val dirPath = new Path(table, dirName)
-        rewrite(sliceRead(spark, table, toRewrite.map(_.dir).sorted, schema))
-          .write.parquet(dirPath.toString)
-        val effStats = if (statsCols.nonEmpty) statsCols
-          else entries.flatMap(_.stats.keys).distinct.sorted
-        val entry = Entry(dirName, commitStats(spark, dirPath, effStats))
-        val content = renderManifest(spark, table, v, kept :+ entry)
-        if (casCreateFile(spark, manifestPath(table, v + 1), content))
-          committed = v + 1
-        else if (tornCasLanded(spark, table, v + 1, dirName))
-          committed = v + 1 // torn read-back: our publish DID land — adopt
-        else f.delete(dirPath, true) // stale-derived rewrite: recompute
+      if (toRewrite.isEmpty && kept.size == entries.size) None
+      else {
+        val fresh = if (toRewrite.isEmpty) Nil
+          else Seq(writeEntry(rewrite(sliceRead(spark, table, toRewrite.map(_.dir).sorted,
+            schema)), table, statsOrInherited(statsCols, entries)))
+        val out = kept ++ fresh
+        Some((if (out.isEmpty) Seq(anchor(schema)) else out, fresh.map(_.dir)))
       }
     }
-    advancePointer(spark, table, committed)
-    committed
   }
 
   /** Stats-pruned copy-on-write UPSERT — the merge that scales: rewrite
@@ -1147,11 +1057,10 @@ object ManifestTable {
     * schema. Target rows with null keys never match and survive. An
     * empty `updates` is a no-op returning the current version.
     *
-    * Concurrency is [[compactCommit]]'s pinned-CAS contract (the rewrite
-    * derives from the snapshot it read; a lost race discards and
-    * recomputes). New-dir stats record on `statsCols`, defaulting to the
-    * head's recorded stats columns so pruning — including the NEXT
-    * merge's — survives by inheritance.
+    * The rewrite re-derives per [[publish]] attempt. New-dir stats
+    * follow [[statsOrInherited]], so pruning — including the NEXT
+    * merge's — survives by inheritance; a merge into an empty table
+    * records them on `keyCols` by default.
     *
     * `updates` is consumed several times (key-hygiene check, range agg,
     * anti-join, write): it is eagerly checkpointed here and released
@@ -1193,21 +1102,13 @@ object ManifestTable {
         }
       }
 
-      val root = new Path(table)
-      val f = fs(spark, root)
-      var committed = 0L
-      while (committed == 0L) {
-        val v = highestManifest(spark, table)
-        if (v == 0) { // merge into nothing = create
-          committed = commit(u, table, append = false,
-            statsCols = if (statsCols.nonEmpty) statsCols else keyCols)
-        } else {
-          checkAppendSchema(spark, table, v, u, allowEvolution = false)
-          val entries = manifestEntries(spark, table, v)
-          val (affected, untouched) = entries.partition(affectedBy)
-          val dirName =
-            newDataDirName()
-          val dirPath = new Path(table, dirName)
+      publish(spark, table) { v =>
+        if (v > 0) checkAppendSchema(spark, table, v, u, allowEvolution = false)
+        val entries = manifestEntries(spark, table, v)
+        val (affected, untouched) = entries.partition(affectedBy)
+        val entry = if (v == 0) // merge into nothing = create
+          writeEntry(u, table, if (statsCols.nonEmpty) statsCols else keyCols)
+        else {
           val schema = snapshotSchemaCached(spark, table, v, entries.map(_.dir))
           // explicit join condition, not usingColumns: a usingColumns
           // join PARSES the names, so a key literally called "a.b" would
@@ -1221,32 +1122,22 @@ object ManifestTable {
             colExact(c) === uKeys(s"__graft_mk_$i") }.reduce(_ && _)
           val survivors = sliceRead(spark, table, affected.map(_.dir).sorted, schema)
             .join(uKeys, antiCond, "left_anti")
-          survivors.unionByName(u).write.parquet(dirPath.toString)
-          val effStats = if (statsCols.nonEmpty) statsCols
-            else entries.flatMap(_.stats.keys).distinct.sorted
-          val entry = Entry(dirName, commitStats(spark, dirPath, effStats))
-          val content = renderManifest(spark, table, v, untouched :+ entry)
-          if (casCreateFile(spark, manifestPath(table, v + 1), content))
-            committed = v + 1
-          else if (tornCasLanded(spark, table, v + 1, dirName))
-            committed = v + 1 // torn read-back: our publish DID land — adopt
-          else f.delete(dirPath, true) // stale-derived rewrite: recompute
+          writeEntry(survivors.unionByName(u), table, statsOrInherited(statsCols, entries))
         }
+        Some((untouched :+ entry, Seq(entry.dir)))
       }
-      advancePointer(spark, table, committed)
-      committed
     } finally graft.CacheHygiene.release(u)
   }
 
   /** THE interval-intersection predicate over recorded stats: can a
     * commit's [min,max] for one column intersect the canonical [lo, hi]
     * (None = unbounded side)? Shared by [[mergeCommit]]'s affected-dir
-    * decision and the SQL scan's dir pruning
-    * ([[GraftDataSource]].statCanMatch delegates here) so the comparison
-    * semantics — decimal for num, UTF-8 binary for str/ts canonical
-    * forms — cannot drift between the merge path and the read path. Any
-    * parse surprise keeps the dir: never-prove-disjoint is the safe
-    * direction on both paths.
+    * decision, [[prunedDataDirs]] and the SQL scan's dir pruning
+    * ([[GraftDataSource.entryCanMatch]]) so the comparison semantics —
+    * decimal for num, UTF-8 binary for str/ts canonical forms — cannot
+    * drift between the merge path and the read paths. Any parse surprise
+    * in a RECORDED bound keeps the dir: never-prove-disjoint is the safe
+    * direction on every path.
     */
   private[graft] def statOverlap(tag: String, s: ColStat,
       lo: Option[String], hi: Option[String]): Boolean =
@@ -1267,44 +1158,32 @@ object ManifestTable {
     * Content-preserving under concurrency, unlike a plain overwrite: the
     * base is the manifest HEAD (not the `_latest` hint, which can lag a
     * crashed publisher — basing on the hint would silently drop the
-    * head's commits), and the CAS is PINNED to that base — if any commit
-    * wins the race, the stale-derived rewrite is discarded and recomputed
-    * from the new head rather than published over it.
+    * head's commits), and [[publish]] re-derives the rewrite from the
+    * new head if any commit wins the race.
     */
   def compactCommit(spark: SparkSession, table: String,
       targetBytes: Long = 128L * 1024 * 1024,
-      statsCols: Seq[String] = Nil): Long = {
-    val root = new Path(table)
-    val f = fs(spark, root)
-    var committed = 0L
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
+      statsCols: Seq[String] = Nil): Long =
+    publish(spark, table) { v =>
       require(v > 0, s"manifest-table: $table has no committed version")
-      // per-dir fs: clone entries may be absolute dirs on a foreign
-      // filesystem (compaction on a clone is the documented escape hatch
-      // from the source-vacuum hazard, so it MUST work on such entries)
-      val bytes = dataDirs(spark, table, v)
-        .map { d => val p = new Path(root, d)
-          fs(spark, p).getContentSummary(p).getLength }.sum
-      val nFiles = ParquetSink.targetFileCount(bytes, targetBytes)
-      val dirName = newDataDirName()
-      val dirPath = new Path(table, dirName)
-      read(spark, table, v).repartition(nFiles).write.parquet(dirPath.toString)
-      val entry = Entry(dirName, commitStats(spark, dirPath, statsCols))
-      // renderManifest, not a bare renderEntry: the #ts stamp must ride
-      // EVERY commit path — an unstamped compaction manifest would make
-      // versionAtTime refuse TIMESTAMP AS OF for every target at or
-      // below it (the legacy-manifest rule firing on a fresh commit)
-      if (casCreateFile(spark, manifestPath(table, v + 1),
-          renderManifest(spark, table, v, Seq(entry))))
-        committed = v + 1
-      else if (tornCasLanded(spark, table, v + 1, dirName))
-        committed = v + 1 // torn read-back: our publish DID land — adopt
-      else f.delete(dirPath, true) // stale-derived rewrite: recompute
+      val nFiles = ParquetSink.targetFileCount(snapshotBytes(spark, table, v), targetBytes)
+      // renderManifest stamps #ts on this manifest like every other: an
+      // unstamped compaction would make versionAtTime refuse TIMESTAMP
+      // AS OF for every target at or below it
+      val entry = writeEntry(read(spark, table, v).repartition(nFiles), table, statsCols)
+      Some((Seq(entry), Seq(entry.dir)))
     }
-    advancePointer(spark, table, committed)
-    committed
-  }
+
+  /** Total data bytes of snapshot `v`. Per-dir fs: clone entries may be
+    * absolute dirs on a foreign filesystem (compaction on a clone is the
+    * documented escape hatch from the source-vacuum hazard, so it MUST
+    * work on such entries).
+    */
+  private def snapshotBytes(spark: SparkSession, table: String, v: Long): Long =
+    dataDirs(spark, table, v).map { d =>
+      val p = new Path(table, d)
+      fs(spark, p).getContentSummary(p).getLength
+    }.sum
 
   /** [[compactCommit]] that PRESERVES pruning: the snapshot is rewritten
     * into `buckets` range-clustered data dirs on `clusterCol` (one
@@ -1323,9 +1202,8 @@ object ManifestTable {
     * files covering a disjoint slice of the cluster column. Rows with a
     * null cluster value sort into the first bucket (null-first range
     * partitioning); a dir whose column is all-null records no stats and
-    * is simply never pruned. Same concurrency contract as
-    * [[compactCommit]]: base pinned to the manifest head, lost CAS race
-    * discards the stale rewrite and recomputes.
+    * is simply never pruned. Same [[publish]] contract as
+    * [[compactCommit]].
     */
   def compactClustered(spark: SparkSession, table: String, clusterCol: String,
       buckets: Int, targetBytes: Long = 128L * 1024 * 1024,
@@ -1363,9 +1241,8 @@ object ManifestTable {
     val root = new Path(table)
     val f = fs(spark, root)
     val recordCols = (clusterCols ++ statsCols).distinct
-    var committed = 0L
-    while (committed == 0L) {
-      val v = highestManifest(spark, table)
+    val anchor = anchorOnce(spark, table)
+    publish(spark, table) { v =>
       require(v > 0, s"manifest-table: $table has no committed version")
       val snapshot = read(spark, table, v)
       clusterCols.foreach(c => require(snapshot.columns.contains(c),
@@ -1377,10 +1254,8 @@ object ManifestTable {
       // would erase it from the compacted snapshot
       require(!snapshot.columns.contains("_graft_ck"),
         "manifest-table: column name _graft_ck is reserved by compaction")
-      val bytes = dataDirs(spark, table, v)
-        .map { d => val p = new Path(root, d) // per-dir fs (clone entries)
-          fs(spark, p).getContentSummary(p).getLength }.sum
-      val nFiles = math.max(buckets, ParquetSink.targetFileCount(bytes, targetBytes))
+      val nFiles = math.max(buckets,
+        ParquetSink.targetFileCount(snapshotBytes(spark, table, v), targetBytes))
       // range partitions are ordered, so a contiguous pid->bucket map keeps
       // each bucket's slice of the cluster key disjoint
       val staging = new Path(root, s"data/.compact-${UUID.randomUUID().toString.take(8)}")
@@ -1411,32 +1286,83 @@ object ManifestTable {
             .map(r => r.getAs[Number](BucketCol).intValue() -> rowStats(tags, r))
             .toMap
         }
-      val entries =
-        if (bucketDirs.nonEmpty) bucketDirs.map { st =>
-          val bucket = st.getPath.getName.stripPrefix(s"$BucketCol=").toInt
-          val dirName = newDataDirName()
-          // a silently-failed move would publish a manifest entry pointing
-          // at a missing dir, breaking every read of the new version —
-          // abort the compaction instead (no CAS happened yet, table intact)
-          require(f.rename(st.getPath, new Path(root, dirName)),
-            s"manifest-table: compaction could not move staged bucket " +
-              s"${st.getPath} to $dirName - aborting before publish")
-          Entry(dirName, bucketStats.getOrElse(bucket, Map.empty))
-        } else { // empty snapshot: keep the version readable (schema-only dir)
-          val dirName = newDataDirName()
-          snapshot.limit(0).write.parquet(new Path(root, dirName).toString)
-          Seq(Entry(dirName, Map.empty))
-        }
+      val moved = bucketDirs.map { st =>
+        val bucket = st.getPath.getName.stripPrefix(s"$BucketCol=").toInt
+        val dirName = newDataDirName()
+        // a silently-failed move would publish a manifest entry pointing
+        // at a missing dir, breaking every read of the new version —
+        // abort the compaction instead (no CAS happened yet, table intact)
+        require(f.rename(st.getPath, new Path(root, dirName)),
+          s"manifest-table: compaction could not move staged bucket " +
+            s"${st.getPath} to $dirName - aborting before publish")
+        Entry(dirName, bucketStats.getOrElse(bucket, Map.empty))
+      }
       f.delete(staging, true) // _SUCCESS and empty shell
-      val content = renderManifest(spark, table, v, entries)
-      if (casCreateFile(spark, manifestPath(table, v + 1), content))
-        committed = v + 1
-      else if (tornCasLanded(spark, table, v + 1, entries.head.dir))
-        committed = v + 1 // torn read-back: our publish DID land — adopt
-      else entries.foreach(e => f.delete(new Path(root, e.dir), true))
+      // an empty snapshot stages no bucket: keep the version readable
+      Some((if (moved.isEmpty) Seq(anchor(snapshot.schema)) else moved, moved.map(_.dir)))
     }
-    advancePointer(spark, table, committed)
-    committed
+  }
+
+  /** SHALLOW CLONE — the zero-copy fork every lakehouse ships
+    * (Delta `CLONE` semantics): `target` is created with ONE commit
+    * whose entries reference the source snapshot's data dirs by
+    * QUALIFIED ABSOLUTE path — no data bytes move; the cost is one
+    * manifest write however many TB the source holds. Stats ride along,
+    * so pruning works on the clone from commit one. The clone evolves
+    * independently: its own commits land under its own `data/`, and its
+    * [[vacuum]] only ever deletes there (foreign absolute dirs are
+    * outside vacuum's local listing by construction — resolution keeps
+    * absolute entry dirs absolute, Path(parent, child) semantics).
+    * The standard shallow-clone hazard is documented, not hidden:
+    * VACUUM or overwrite+vacuum on the SOURCE can delete dirs the clone
+    * still references — [[compactCommit]] on the clone deep-copies and
+    * cuts the dependency. A torn creation report adopts through
+    * [[publish]]: `m-1` listing exactly the source snapshot's dirs is
+    * this clone (or an identical concurrent one); anything else is a
+    * pre-existing target.
+    */
+  def cloneShallow(spark: SparkSession, source: String, target: String,
+      version: Long = 0L): Long = {
+    val v = if (version > 0) version else currentVersion(spark, source)
+    require(v > 0, s"manifest-table: $source has no committed version")
+    require(versionExists(spark, source, v),
+      s"manifest-table: clone source version $v of $source is not retained")
+    val srcRoot = { val p = new Path(source); fs(spark, p).makeQualified(p) }
+    val abs = manifestEntries(spark, source, v)
+      .map(e => e.copy(dir = new Path(srcRoot, e.dir).toString))
+    publish(spark, target) { base =>
+      require(base == 0, s"manifest-table: clone target $target already exists")
+      Some((abs, Nil))
+    }
+  }
+
+  /** RESTORE — rollback as a COMMIT (Delta `RESTORE` semantics):
+    * publishes head+1 whose entries are exactly `toVersion`'s. History
+    * is preserved — the rolled-back commits stay addressable for
+    * forensics and time travel — and incremental consumers hit
+    * [[readAppendedSince]]'s loud non-append boundary instead of
+    * silently double-reading rows they already consumed. Requires the
+    * target version still retained (not vacuumed); its data dirs are
+    * then live by the vacuum invariant, and publishing them at the head
+    * re-pins them against future vacuums.
+    */
+  def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
+    require(toVersion > 0 && versionExists(spark, table, toVersion),
+      s"manifest-table: version $toVersion of $table is not retained")
+    val entries = manifestEntries(spark, table, toVersion)
+    publish(spark, table) { _ =>
+      // re-validate PER ATTEMPT: a concurrent commit plus an aggressive
+      // vacuum can retire toVersion (and delete its now-unreferenced
+      // dirs) between our entry read and a late CAS win — publishing the
+      // stale entry list would pin a head full of deleted dirs. The
+      // check shrinks the window to one CAS round-trip; closing it fully
+      // needs what every table format needs here: don't run vacuum with
+      // keepVersions below the restore horizon you intend to use.
+      require(versionExists(spark, table, toVersion),
+        s"manifest-table: version $toVersion of $table was vacuumed " +
+          "mid-restore - aborting before publishing dangling dirs")
+      Some((entries, Nil))
+    }
   }
 
   /** Delete data dirs no version ≥ (current - keepVersions + 1) references,
@@ -1454,85 +1380,6 @@ object ManifestTable {
     * its manifest yet (the Delta/Iceberg retention pattern). Keep
     * graceMs comfortably above the longest commit's write time.
     */
-  /** SHALLOW CLONE (r15) — the zero-copy fork every lakehouse ships
-    * (Delta `CLONE` semantics): `target` is created with ONE commit
-    * whose entries reference the source snapshot's data dirs by
-    * QUALIFIED ABSOLUTE path — no data bytes move; the cost is one
-    * manifest write however many TB the source holds. Stats ride along,
-    * so pruning works on the clone from commit one. The clone evolves
-    * independently: its own commits land under its own `data/`, and its
-    * [[vacuum]] only ever deletes there (foreign absolute dirs are
-    * outside vacuum's local listing by construction — resolution keeps
-    * absolute entry dirs absolute, Path(parent, child) semantics).
-    * The standard shallow-clone hazard is documented, not hidden:
-    * VACUUM or overwrite+vacuum on the SOURCE can delete dirs the clone
-    * still references — [[compactCommit]] on the clone deep-copies and
-    * cuts the dependency.
-    */
-  def cloneShallow(spark: SparkSession, source: String, target: String,
-      version: Long = 0L): Long = {
-    val v = if (version > 0) version else currentVersion(spark, source)
-    require(v > 0, s"manifest-table: $source has no committed version")
-    require(versionExists(spark, source, v),
-      s"manifest-table: clone source version $v of $source is not retained")
-    require(highestManifest(spark, target) == 0,
-      s"manifest-table: clone target $target already exists")
-    val srcRoot = { val p = new Path(source); fs(spark, p).makeQualified(p) }
-    val abs = manifestEntries(spark, source, v)
-      .map(e => e.copy(dir = new Path(srcRoot, e.dir).toString))
-    if (!casCreateFile(spark, manifestPath(target, 1),
-        renderManifest(spark, target, 0, abs))) {
-      // torn-CAS recovery (the CommitStore contract): the publish may
-      // have LANDED with the false report. m-1 referencing exactly our
-      // snapshot's dirs proves it is this clone (ours, or an identical
-      // concurrent clone of the same source version — equivalent by
-      // content); anything else is a genuinely pre-existing target.
-      val landed = scala.util.Try(manifestEntries(spark, target, 1)).toOption
-      require(landed.exists(_.map(_.dir).toSet == abs.map(_.dir).toSet),
-        s"manifest-table: clone target $target already exists")
-    }
-    advancePointer(spark, target, 1)
-    1L
-  }
-
-  /** RESTORE (r15) — rollback as a COMMIT (Delta `RESTORE` semantics):
-    * publishes head+1 whose entries are exactly `toVersion`'s. History
-    * is preserved — the rolled-back commits stay addressable for
-    * forensics and time travel — and incremental consumers hit
-    * [[readAppendedSince]]'s loud non-append boundary instead of
-    * silently double-reading rows they already consumed. Requires the
-    * target version still retained (not vacuumed); its data dirs are
-    * then live by the vacuum invariant, and publishing them at the head
-    * re-pins them against future vacuums.
-    */
-  def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
-    require(toVersion > 0 && versionExists(spark, table, toVersion),
-      s"manifest-table: version $toVersion of $table is not retained")
-    val entries = manifestEntries(spark, table, toVersion)
-    var committed = 0L
-    while (committed == 0L) {
-      val base = highestManifest(spark, table)
-      // re-validate PER ATTEMPT: a concurrent commit plus an aggressive
-      // vacuum can retire toVersion (and delete its now-unreferenced
-      // dirs) between our entry read and a late CAS win — publishing the
-      // stale entry list would pin a head full of deleted dirs. The
-      // check shrinks the window to one CAS round-trip; closing it fully
-      // needs what every table format needs here: don't run vacuum with
-      // keepVersions below the restore horizon you intend to use.
-      require(versionExists(spark, table, toVersion),
-        s"manifest-table: version $toVersion of $table was vacuumed " +
-          "mid-restore - aborting before publishing dangling dirs")
-      if (casCreateFile(spark, manifestPath(table, base + 1),
-          renderManifest(spark, table, base, entries)))
-        committed = base + 1
-      // else: lost a commit race — re-read the head and retry (the
-      // restored SNAPSHOT is what's pinned, whatever version number it
-      // lands as)
-    }
-    advancePointer(spark, table, committed)
-    committed
-  }
-
   def vacuum(spark: SparkSession, table: String, keepVersions: Int = 1,
       graceMs: Long = 60L * 60 * 1000): Unit = {
     require(keepVersions >= 1)
@@ -1547,10 +1394,7 @@ object ManifestTable {
     // protocol files (manifests, temps) live in the commit store; data
     // dirs are plain parquet on the filesystem — same split as commit
     val manifestFiles = st.listFiles(manifestRoot)
-    val manifestVers: Seq[Long] = manifestFiles.flatMap { case (n, _) =>
-      Option(n).filter(x => x.startsWith("m-") && x.endsWith(".txt"))
-        .flatMap(_.stripPrefix("m-").stripSuffix(".txt").toLongOption)
-    }
+    val manifestVers = manifestVersions(manifestFiles).map(_._1)
     // live = everything the retained versions reference PLUS anything an
     // in-flight (not-yet-pointed) manifest references
     val live = manifestVers.filter(_ >= keepFrom)
@@ -1561,11 +1405,9 @@ object ManifestTable {
         .filter(s => !live.contains(s"data/${s.getPath.getName}"))
         .filter(_.getModificationTime <= cutoff)
         .foreach(s => f.delete(s.getPath, true))
+    manifestVers.filter(_ < keepFrom).foreach(v => st.delete(manifestPath(table, v)))
     manifestFiles.foreach { case (name, mtime) =>
-      val superseded = name.startsWith("m-") &&
-        name.stripPrefix("m-").stripSuffix(".txt").toLongOption.exists(_ < keepFrom)
-      val staleTmp = name.contains(".tmp-") && mtime <= cutoff
-      if (superseded || staleTmp) st.delete(new Path(manifestRoot, name))
+      if (name.contains(".tmp-") && mtime <= cutoff) st.delete(new Path(manifestRoot, name))
     }
     // crashed _latest publishes leave temps in the table root
     st.listFiles(root)

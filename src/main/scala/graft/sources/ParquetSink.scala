@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions.col
   */
 object ParquetSink {
 
-  /** Write with hive-style partitions, sorted within files so parquet
-    * column statistics (min/max per row group) prune point/range reads.
-    */
   /** One partition-clustered, stat-friendly physical ordering shared by
     * every partitioned write path. */
   private def layoutSorted(df: DataFrame, partitionCols: Seq[String],
@@ -21,6 +18,9 @@ object ParquetSink {
     else df.repartition(partitionCols.map(col): _*)
       .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
 
+  /** Write with hive-style partitions, sorted within files so parquet
+    * column statistics (min/max per row group) prune point/range reads.
+    */
   def writePartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String], sortCols: Seq[String],
       mode: SaveMode = SaveMode.Overwrite): Unit =

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 
-import graft.sources.{CommitStore, ManifestTable, RenameCommitStore}
+import graft.sources.{CommitStore, GraftCatalog, ManifestTable, RenameCommitStore}
 
 /** A [[CommitStore]] that simulates the torn-CAS outcome the contract
   * warns about: when armed, ONE successful putIfAbsent is reported as
@@ -31,11 +31,10 @@ object TornOnceStore {
   val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
-/** r15 hardening specs for the manifest-table protocol edges a
-  * whole-file review surfaced: torn-CAS adoption in derived commits,
-  * commit-time stamps on compaction manifests, the `_graft_ck`
-  * reservation, snapshotDiff's null-key refusal, and order-insensitive
-  * append schema checks.
+/** Hardening specs for the manifest-table protocol edges: torn-CAS
+  * adoption on every publish path, commit-time stamps on compaction
+  * manifests, the `_graft_ck` reservation, snapshotDiff's null-key
+  * refusal, and order-insensitive append schema checks.
   */
 class ManifestHardeningSpec extends SparkSpec {
   import org.apache.spark.sql.functions.col
@@ -50,43 +49,83 @@ class ManifestHardeningSpec extends SparkSpec {
     }
   }
 
+  /** Run `body` with one torn CAS report armed and check the publish
+    * landed exactly once: the call published `before + 1`, the pointer
+    * serves it, and no second copy exists at `before + 2`. `body`
+    * returns the version the call reports.
+    */
+  private def publishedOnce(table: String)(body: => Long): Unit = {
+    val before = ManifestTable.currentVersion(spark, table)
+    TornOnceStore.armed.set(true)
+    val v = body
+    assert(!TornOnceStore.armed.get(), "the torn report must have fired")
+    val head = ManifestTable.historyRows(spark, table).map(_._1).max
+    assert(v == before + 1 && head == v, s"returned $v, head $head, before $before")
+    assert(ManifestTable.currentVersion(spark, table) == head,
+      s"pointer must serve the adopted head $head")
+    assert(!ManifestTable.versionExists(spark, table, v + 1),
+      "adoption must not double-publish")
+  }
+
   test("torn-CAS adoption: derived commits adopt a landed publish instead of deleting its dir") {
     import spark.implicits._
     withTornStore {
-      val table = Files.createTempDirectory("graft_torn").toString + "/t"
-      val v1 = ManifestTable.commit(
-        (1 to 100).map(i => (i.toLong, s"r$i")).toDF("id", "v"),
-        table, append = false, statsCols = Seq("id"))
-      assert(v1 == 1)
+      val root = Files.createTempDirectory("graft_torn").toString
+      spark.conf.set("spark.sql.catalog.torn", classOf[GraftCatalog].getName)
+      spark.conf.set("spark.sql.catalog.torn.root", root)
+      val table = s"$root/t"
+      def rows(lo: Long, hi: Long) = (lo to hi).map(i => (i, s"v$i")).toDF("id", "v")
+      def count() = ManifestTable.read(spark, table).count()
+      ManifestTable.commit(rows(1, 100), table, append = false, statsCols = Seq("id"))
 
-      // compaction: CAS lands but reports false — the loop must adopt
-      // v2 (a retry would find head v2 referencing a dir it deleted and
-      // crash every read of the table)
-      TornOnceStore.armed.set(true)
-      val cv = ManifestTable.compactCommit(spark, table)
-      assert(!TornOnceStore.armed.get(), "the torn report must have fired")
-      assert(cv == 2 && ManifestTable.currentVersion(spark, table) == 2)
-      assert(ManifestTable.read(spark, table).count() == 100,
-        "adopted compaction snapshot must stay fully readable")
-
-      // merge: same torn report on the COW rewrite publish
-      TornOnceStore.armed.set(true)
-      val mv = ManifestTable.mergeCommit(spark, table,
-        Seq((1L, "upd")).toDF("id", "v"), keyCols = Seq("id"))
-      assert(mv == 3 && ManifestTable.currentVersion(spark, table) == 3)
-      assert(!ManifestTable.versionExists(spark, table, 4),
-        "adoption must not double-publish the merge as an extra version")
+      // every publish path: the CAS lands but reports false, and the call
+      // must adopt it — a retry would publish a second copy, and deleting
+      // the attempt's dir would leave the landed head unreadable
+      publishedOnce(table)(ManifestTable.commit(rows(101, 200), table,
+        append = true, statsCols = Seq("id")))
+      assert(count() == 200)
+      publishedOnce(table)(ManifestTable.commit(rows(1, 200), table,
+        append = false, statsCols = Seq("id")))
+      assert(count() == 200)
+      publishedOnce(table)(ManifestTable.commitIdempotent(rows(201, 300), table,
+        "b-1", statsCols = Seq("id")))
+      assert(count() == 300)
+      // metadata-only DELETE: the 201..300 commit provably all-matches,
+      // the 1..200 commit provably cannot match
+      publishedOnce(table) {
+        spark.sql("DELETE FROM torn.t WHERE id >= 201")
+        ManifestTable.currentVersion(spark, table)
+      }
+      assert(count() == 200)
+      // copy-on-write DELETE and UPDATE: the 1..200 commit straddles
+      publishedOnce(table) {
+        spark.sql("DELETE FROM torn.t WHERE id = 150")
+        ManifestTable.currentVersion(spark, table)
+      }
+      assert(count() == 199)
+      publishedOnce(table) {
+        spark.sql("UPDATE torn.t SET v = 'u' WHERE id = 7")
+        ManifestTable.currentVersion(spark, table)
+      }
+      assert(spark.sql("SELECT v FROM torn.t WHERE id = 7").head.getString(0) == "u")
+      publishedOnce(table)(ManifestTable.mergeCommit(spark, table,
+        Seq((1L, "upd")).toDF("id", "v"), keyCols = Seq("id")))
       val snap = ManifestTable.read(spark, table)
-      assert(snap.count() == 100 &&
+      assert(snap.count() == 199 &&
         snap.filter(col("id") === 1L).select("v").head().getString(0) == "upd",
         "adopted merge must hold exactly the merged snapshot")
+      publishedOnce(table)(ManifestTable.restore(spark, table, 2))
+      assert(count() == 200)
+      publishedOnce(table)(ManifestTable.compactClustered(spark, table, "id", buckets = 2))
+      assert(count() == 200)
+      publishedOnce(table)(ManifestTable.compactCommit(spark, table))
+      assert(count() == 200, "adopted compaction snapshot must stay fully readable")
 
       // shallow clone: the creation CAS lands with a false report — the
       // clone must be adopted, not refused as "already exists"
-      TornOnceStore.armed.set(true)
       val target = Files.createTempDirectory("graft_torn_clone").toString + "/c"
-      assert(ManifestTable.cloneShallow(spark, table, target) == 1L)
-      assert(ManifestTable.read(spark, target).count() == 100,
+      publishedOnce(target)(ManifestTable.cloneShallow(spark, table, target))
+      assert(ManifestTable.read(spark, target).count() == 200,
         "adopted clone must read the source snapshot")
     }
   }
